@@ -87,7 +87,8 @@ object tupleagg {
   /** `max_tuple(a, b, ...)` ≡ `max(struct(a, b, ...))`, planned as a
     * HashAggregate (primitive fields only — a string/array field silently
     * de-optimizes the buffer back to SortAggregate territory; keep those
-    * on `max(struct(...))`). Field names follow the columns/aliases. */
+    * on `max(struct(...))`). Field names follow the columns/aliases; an
+    * unnamed field (an expression without `.as`) is rejected. */
   def max_tuple(fields: Column*): Column = make(fields, isMax = true)
 
   /** `min_tuple(a, b, ...)` ≡ `min(struct(a, b, ...))` — see [[max_tuple]]. */
@@ -97,8 +98,10 @@ object tupleagg {
     // field names come from the COLUMN node (alias / attribute name) —
     // Bridge.expression returns a lazy ColumnNodeExpression wrapper, so
     // the catalyst NamedExpression shape is not visible pre-analysis
-    val names = fields.zipWithIndex.map { case (c, i) =>
-      Bridge.columnName(c).getOrElse(s"col${i + 1}")
+    val names = fields.map { c =>
+      Bridge.columnName(c).getOrElse(throw new IllegalArgumentException(
+        s"${if (isMax) "max_tuple" else "min_tuple"} field `$c` has no name: " +
+          "pass a column reference or alias the expression with .as(...)"))
     }
     Bridge.column(TupleExtremum(fields.map(Bridge.expression), names, isMax)
       .toAggregateExpression())

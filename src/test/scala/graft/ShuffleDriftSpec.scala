@@ -32,7 +32,9 @@ class ShuffleDriftSpec extends SparkSpecBase {
     ("j1_dim_join_distinct", 7223L, 7223L, 2L), // broadcast join: only the distinct shuffles
     ("w1_topk_sort", 2897L, 2897L, 2L), // TakeOrdered: per-partition heads only
     ("ta_token_count", 87696L, 87696L, 2L), // scan-side kernel + small agg
-    ("dedup_exact", 125947L, 125947L, 2L), // digest-keyed groupBy, one exchange
+    // re-pinned from 125,947: Tables.documentsUnpinned stopped shuffling
+    // the text column (ba56155); the digest-keyed groupBy is unchanged
+    ("dedup_exact", 36669L, 36669L, 2L), // digest-keyed groupBy, one exchange
     ("dedup_exact_substring", 737123L, 737123L, 2L), // compact 8-byte gram keys, no text
     ("dedup_minhash_lsh", 149632L, 149632L, 2L), // band keys + verify joins
     ("dedup_simhash", 134888L, 134888L, 2L), // pigeonhole join with fused hamming (re-pinned r11)
@@ -47,21 +49,22 @@ class ShuffleDriftSpec extends SparkSpecBase {
     ("t20_stream_substring_dedup", 222611L, 222611L, 4L))
 
   test("shuffle bytes stay within their pinned sf0.001 band") {
-    pins.foreach { case (name, pinR, pinW, band) =>
+    // every query runs and every drift is listed, so one failure shows
+    // whether a single plan moved or every pin moved together
+    val drifts = pins.flatMap { case (name, pinR, pinW, band) =>
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
       val fn = SparkEntry.queries(name)
       val (_, r, w) = ShuffleTelemetry.measure(spark) {
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       }
-      def inBand(actual: Long, pin: Long, kind: String): Unit =
-        assert(actual >= pin / band && actual <= pin * band,
-          s"$name $kind shuffle bytes drifted >${band}x: $actual vs pinned $pin — " +
-          "if the plan change is deliberate, re-pin via graft.ShuffleProbe " +
-          "and explain in the commit")
-      inBand(r, pinR, "read")
-      inBand(w, pinW, "write")
       info(s"$name read=$r write=$w (pins $pinR/$pinW)")
+      Seq(("read", r, pinR), ("write", w, pinW)).collect {
+        case (kind, actual, pin) if actual < pin / band || actual > pin * band =>
+          s"$name $kind shuffle bytes drifted >${band}x: $actual vs pinned $pin"
+      }
     }
+    assert(drifts.isEmpty, drifts.mkString("\n", "\n", "\n") +
+      "if a plan change is deliberate, re-pin via graft.ShuffleProbe and explain in the commit")
   }
 }

@@ -19,6 +19,9 @@ object SparkSpecBase {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // the shipped `file` scheme, but none of the rest of Confs.tuned:
+      // its AQE and committer settings would move ShuffleDriftSpec's pins
+      .config(Confs.localFileSystem)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

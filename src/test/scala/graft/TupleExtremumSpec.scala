@@ -41,6 +41,11 @@ class TupleExtremumSpec extends SparkSpecBase {
     assert(viaTuple.collect().toSeq === viaStruct.collect().toSeq)
   }
 
+  test("an unnamed field fails, naming the expression") {
+    val e = intercept[IllegalArgumentException](min_tuple($"doc_id", $"pos" + 1))
+    assert(e.getMessage.contains("min_tuple") && e.getMessage.contains("pos"), e.getMessage)
+  }
+
   test("NaN ranks largest and equal to itself — Spark struct-order parity") {
     val df = Seq(("g", Double.NaN, 1L), ("g", 100.0, 2L), ("g", Double.NaN, 0L))
       .toDF("g", "v", "id")

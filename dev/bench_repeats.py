@@ -3,9 +3,9 @@
 {name: {"repeats": [...], "min": m, "median": d,
         "sys_steal": [...], "minflt": [...], "majflt": [...]}}.
 
-Two line formats feed it:
-  [bench] name: t1 t2 ...                       seconds per sample
-  [bench-host] name: t@storm/minflt/majflt ...  per-sample host evidence
+It reads the per-sample lines
+  [bench-host] name: t@storm/minflt/majflt/cpuRatio ...
+(seconds plus the host evidence of each sample).
 
 The bench host is a VM that faults fresh 4 KiB pages at ~120 MB/s with
 mmap_lock serialization (see build.sbt's heap-pinning comment) and takes
@@ -23,7 +23,6 @@ import re
 import statistics
 import sys
 
-BENCH = re.compile(r'\[bench\] (\S+): ([0-9. ]+)$')
 HOST = re.compile(r'\[bench-host\] (\S+): (.+)$')
 # sec@sysSteal/minflt/majflt[/cpuRatio] — cpuRatio (our process's
 # cpu/wall for the window) added r13: low ratio on a slow sample =
@@ -35,50 +34,30 @@ def parse(path):
     # accumulate per name WITHIN a file too (r12 ADVICE): an appended
     # log with two bench sessions must not drop the earlier session's
     # samples — build_steady_artifact merges across files the same way
-    secs, host = {}, {}
+    host = {}
     for line in open(path):
-        line = line.strip()
-        m = BENCH.match(line)
-        if m:
-            secs.setdefault(m.group(1), []).extend(
-                float(x) for x in m.group(2).split())
+        m = HOST.match(line.strip())
+        if not m:
             continue
-        m = HOST.match(line)
-        if m:
-            h = host.setdefault(m.group(1),
-                                {'sec': [], 'storm': [], 'minflt': [], 'majflt': [],
-                                 'cpu_ratio': []})
-            for tok in m.group(2).split():
-                s = HOST_SAMPLE.match(tok)
-                if s:
-                    h['sec'].append(float(s.group(1)))
-                    h['storm'].append(float(s.group(2)))
-                    h['minflt'].append(int(s.group(3)))
-                    h['majflt'].append(int(s.group(4)))
-                    h['cpu_ratio'].append(float(s.group(5)) if s.group(5) else None)
-    out = {}
-    for name in sorted(set(secs) | set(host)):
-        # [bench] only prints for >1 samples; [bench-host] always does —
-        # prefer whichever saw more samples (they agree when both fire)
-        h = host.get(name, {'sec': [], 'storm': [], 'minflt': [], 'majflt': [],
-                            'cpu_ratio': []})
-        ts = h['sec'] if len(h['sec']) >= len(secs.get(name, [])) else secs[name]
-        # evidence arrays must align 1:1 with the chosen repeats vector
-        # (r13 ADVICE): when repeats fall back to [bench] seconds from a
-        # mixed pre-r13/new log, the host arrays describe a DIFFERENT
-        # sample set — emit them empty rather than misattributed
-        aligned = ts is h['sec'] and all(
-            len(h[k]) == len(ts) for k in ('storm', 'minflt', 'majflt', 'cpu_ratio'))
-        out[name] = {
-            'repeats': ts,
-            'min': min(ts),
-            'median': round(statistics.median(ts), 3),
-            'sys_steal': h['storm'] if aligned else [],
-            'minflt': h['minflt'] if aligned else [],
-            'majflt': h['majflt'] if aligned else [],
-            'cpu_ratio': h['cpu_ratio'] if aligned else [],
-        }
-    return out
+        h = host.setdefault(m.group(1),
+                            {'sec': [], 'storm': [], 'minflt': [], 'majflt': [],
+                             'cpu_ratio': []})
+        for tok in m.group(2).split():
+            s = HOST_SAMPLE.match(tok)
+            if s:
+                h['sec'].append(float(s.group(1)))
+                h['storm'].append(float(s.group(2)))
+                h['minflt'].append(int(s.group(3)))
+                h['majflt'].append(int(s.group(4)))
+                h['cpu_ratio'].append(float(s.group(5)) if s.group(5) else None)
+    return {name: {'repeats': h['sec'],
+                   'min': min(h['sec']),
+                   'median': round(statistics.median(h['sec']), 3),
+                   'sys_steal': h['storm'],
+                   'minflt': h['minflt'],
+                   'majflt': h['majflt'],
+                   'cpu_ratio': h['cpu_ratio']}
+            for name, h in sorted(host.items())}
 
 
 if __name__ == '__main__':

@@ -25,10 +25,12 @@ done
 # without a writable /dev/shm
 if [ -d /dev/shm ] && [ -w /dev/shm ]; then TMPD=/dev/shm/graft_tmp; else TMPD=/tmp; fi
 mkdir -p "$TMPD"
+# heap: SPARK_DRIVER_MEM, else min(48g, half of RAM) as in build.sbt
+MEM="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152); print (g > 48 ? 48 : g < 1 ? 1 : g) "g"}' /proc/meminfo 2>/dev/null || echo 48g)}"
 exec java $ADD_OPENS \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Djava.io.tmpdir="$TMPD" \
-  -Xmx"${SPARK_DRIVER_MEM:-48g}" -Xms"${SPARK_DRIVER_MEM:-48g}" \
+  -Xmx"$MEM" -Xms"$MEM" \
   -XX:+UseTransparentHugePages \
   ${GRAFT_JVM_EXTRA:-} \
   -cp "$CP" "$@"

@@ -23,9 +23,10 @@ object Confs {
   def withShufflePartitions[T](spark: SparkSession, n: Int)(body: => T): T =
     withSessionConf(spark, "spark.sql.shuffle.partitions", n.toString)(body)
 
-  /** Engine tuning shared by the driver-facing sessions (Bench / Verify
-    * / Profile / PlanDump / PlanAudit / Scratch) — r14 optimization
-    * round, guide §2.2 + §6:
+  /** Engine tuning of the one session every main builds
+    * ([[GraftSession.build]]: Bench, Verify, Profile, PlanAudit) and of
+    * the benchmark harness session — r14 optimization round, guide
+    * §2.2 + §6:
     *
     *  - SIZE-BASED AQE partition coalescing. With the default
     *    `parallelismFirst=true` AQE refuses to coalesce a post-shuffle

@@ -1,12 +1,11 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: per-JOB wall-clock attribution inside a single registered
   * query — the local stand-in for the Spark UI's Jobs page (guide §1.1/
   * §7.1; the bench host runs with the UI off). Runs the named queries
-  * like Bench (same session confs, noop sink) and prints one line per
+  * like Bench (GraftSession, noop sink) and prints one line per
   * Spark job: duration, stage task counts, and the callsite, so a 3 s
   * query can be split into "staging write / drain batch / census join"
   * instead of guessed at.
@@ -16,16 +15,9 @@ import org.apache.spark.sql.SparkSession
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Confs.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.local.dir", ScratchDirs.dir("spark_local"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val queries = GraftSession.selected()
+    val spark = GraftSession.build()
+    GraftSession.warm(spark, sfDir)
     @volatile var jobStart = Map.empty[Int, (Long, String)]
     val taskCounts = new java.util.concurrent.ConcurrentHashMap[Int, (Int, Long)]()
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -49,21 +41,17 @@ object Profile {
         }
       }
     })
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val repeat = math.max(1,
       sys.env.get("SPARK_GRAFT_REPEAT").flatMap(_.toIntOption).getOrElse(1))
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .foreach { case (name, fn) =>
-        (1 to repeat).foreach { i =>
-          System.err.println(s"[prof-query] $name run $i")
-          val t0 = System.nanoTime()
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          System.err.println(f"[prof-total] $name run $i ${(System.nanoTime() - t0) / 1e9}%.3fs")
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-        }
+    queries.foreach { case (name, fn) =>
+      (1 to repeat).foreach { i =>
+        System.err.println(s"[prof-query] $name run $i")
+        val t0 = System.nanoTime()
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        System.err.println(f"[prof-total] $name run $i ${(System.nanoTime() - t0) / 1e9}%.3fs")
+        GraftSession.reset(spark)
       }
+    }
     spark.stop()
   }
 }

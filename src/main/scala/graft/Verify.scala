@@ -1,44 +1,22 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  * SPARK_GRAFT_ONLY=q1,q2 restricts the dump to named queries. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Confs.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // see Bench: avoid generated-class cache thrash across 84 queries
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.local.dir", ScratchDirs.dir("spark_local"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // pre-init the ICU collation tables (see Bench warmup): the lazy
-    // 20-30 s CollationAwareUTF8String class init otherwise lands
-    // inside an arbitrary query's dump
-    spark.range(1).select(
-      org.apache.spark.sql.functions.lower(org.apache.spark.sql.functions.lit("Étude")))
-      .collect()
+    val queries = GraftSession.selected()
+    val spark = GraftSession.build()
+    GraftSession.warm(spark, sfDir)
     new java.io.File(outDir).mkdirs()
-    // dev loop: SPARK_GRAFT_ONLY=q1,q2 restricts the dump to named queries
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    queries.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      finally {
-        spark.catalog.clearCache() // queries may persist() internally
-        // localCheckpoint blocks survive clearCache — drop them too
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      }
+      finally GraftSession.reset(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

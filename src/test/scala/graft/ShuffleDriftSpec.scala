@@ -8,17 +8,18 @@ package graft
   * bytes for a representative, SessionMemo-free query set and fails on
   * a >2× move in either direction.
   *
-  * The pins were measured with graft.ShuffleProbe under this exact
-  * session config (local[4], 4 shuffle partitions, AQE on) and are
+  * The pins are this spec's own measurements under the shared test
+  * session (local[4], 4 shuffle partitions, AQE on), which it logs for
+  * every query as `info` lines (`<query> read=<r> write=<w>`), and are
   * byte-for-byte reproducible: shuffle totals at a fixed SF are a pure
   * function of data + plan (lz4 is deterministic; AQE coalescing moves
   * partition boundaries, not totals). Each query measures COLD (cache
   * cleared first), so suite order cannot shift them. If a deliberate
-  * plan change moves a pin, re-run the probe and re-pin IN THE SAME
+  * plan change moves a pin, re-pin from those lines IN THE SAME
   * COMMIT, saying why. An INFRA upgrade (Spark version, lz4, partition
   * defaults) can legitimately move EVERY pin at once — that failure
   * mode is wholesale and self-identifying (all pins drift together,
-  * no repo diff); re-pin the whole table in one pass with the probe.
+  * no repo diff); re-pin the whole table in one pass from one run.
   *
   * dedup_simhash's layout stats pass is memoized per (corpus, JVM)
   * since r12 (SessionMemo.value) — probed memo-warm vs memo-cold:
@@ -52,8 +53,7 @@ class ShuffleDriftSpec extends SparkSpecBase {
     // every query runs and every drift is listed, so one failure shows
     // whether a single plan moved or every pin moved together
     val drifts = pins.flatMap { case (name, pinR, pinW, band) =>
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      GraftSession.reset(spark)
       val fn = SparkEntry.queries(name)
       val (_, r, w) = ShuffleTelemetry.measure(spark) {
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
@@ -65,6 +65,7 @@ class ShuffleDriftSpec extends SparkSpecBase {
       }
     }
     assert(drifts.isEmpty, drifts.mkString("\n", "\n", "\n") +
-      "if a plan change is deliberate, re-pin via graft.ShuffleProbe and explain in the commit")
+      "if a plan change is deliberate, re-pin from this spec's `read=/write=` info lines " +
+      "and explain in the commit")
   }
 }
